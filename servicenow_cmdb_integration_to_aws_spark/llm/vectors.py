@@ -460,9 +460,8 @@ def _pair_block_kernel(key, pdf):
         la = A["embedding"].map(len).to_numpy()
         lb = B["embedding"].map(len).to_numpy()
         for L in np.intersect1d(np.unique(la), np.unique(lb)):
+            # L > 0: zero-length vectors fail vec_ok in neardup_blocked
             Ai, Bi = A[la == L], B[lb == L]
-            if L == 0:
-                continue  # zero-length vectors fail vec_ok upstream
             MA = np.stack(Ai["embedding"].to_numpy()).astype(np.float64)
             MB = np.stack(Bi["embedding"].to_numpy()).astype(np.float64)
             ida = Ai["vec_id"].to_numpy()

@@ -48,6 +48,7 @@ def query(qid: str, oracle: Optional[str] = None):
         wrapped.__name__ = f"q_{qid}"
         wrapped.__qualname__ = wrapped.__name__
         wrapped.__doc__ = fn.__doc__
+        wrapped.__module__ = fn.__module__
         if qid in QUERIES:
             raise ValueError(f"duplicate query id {qid!r}")
         QUERIES[qid] = wrapped

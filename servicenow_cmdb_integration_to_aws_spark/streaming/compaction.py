@@ -101,21 +101,28 @@ def _stage_batch_dirs2(df: DataFrame, bucket_a, bucket_b):
     with ``__a=h, __b=t`` belongs to log A's batch h AND log B's batch
     t, so neither take may move the file — links share the bytes, and
     each log's retention deletes its own links independently). Falls
-    back to a copy across filesystems. Batches still enter each log
-    exactly at their protocol points via ``take``; an empty bucket
+    back to a copy across filesystems only; a name collision (a
+    repeated take into the same dest) raises. Batches still enter each
+    log exactly at their protocol points via ``take``; an empty bucket
     value stages an empty batch dir with the source schema, as before.
     PRECONDITION (callers'): both bucket expressions are non-NULL for
-    every row — i22 builds them over ``coalesce(event_id, 0)``. At
+    every row — i22 builds them over ``coalesce(event_id, 0)``. The
+    staging write enforces it: a NULL bucket fails the write job
+    (``raise_error`` inside the projection, no extra Spark action). At
     100 TB the staged files are the fixture INPUT build (the log an
     upstream sink would have written), not query output; halving its
     source passes is the same §6 win as the r14 fusion."""
+    import errno
     import glob
     import shutil
 
+    def non_null(bucket, name):
+        return F.coalesce(bucket, F.raise_error(F.lit(f"_stage_batch_dirs2: NULL bucket {name}")))
+
     tmp = tempfile.mkdtemp(prefix="stage_batches2_")
     (
-        df.withColumn("__a", bucket_a)
-        .withColumn("__b", bucket_b)
+        df.withColumn("__a", non_null(bucket_a, "a"))
+        .withColumn("__b", non_null(bucket_b, "b"))
         .write.mode("overwrite")
         .partitionBy("__a", "__b")
         .parquet(tmp)
@@ -142,8 +149,10 @@ def _stage_batch_dirs2(df: DataFrame, bucket_a, bucket_b):
             out = os.path.join(dest, f"a{av}-b{bv}-{rel[-1]}")
             try:
                 os.link(f, out)
-            except OSError:  # cross-device staging: fall back to copy
-                shutil.copy2(f, out)
+            except OSError as e:
+                if e.errno != errno.EXDEV:
+                    raise
+                shutil.copy2(f, out)  # cross-device staging
 
     def done() -> None:
         shutil.rmtree(tmp, ignore_errors=True)

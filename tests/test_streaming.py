@@ -2315,3 +2315,38 @@ def test_store_group_gc_honors_manifest_pins(spark):
     assert group.read_pinned(spark)["b"].count() == 2
     with pytest.raises(ValueError, match="keep_last"):
         group.gc(keep_last=0)
+
+
+def test_stage_batch_dirs2_repeated_take_raises(spark, tmp_path):
+    """A second take of the same value into the same dest collides on
+    every link name: it must raise, not silently overwrite through the
+    cross-device copy fallback (only EXDEV may fall back)."""
+    from servicenow_cmdb_integration_to_aws_spark.streaming.compaction import (
+        _stage_batch_dirs2,
+    )
+
+    df = spark.range(6)
+    take, done = _stage_batch_dirs2(df, F.col("id") % 2, F.col("id") % 3)
+    try:
+        dest = str(tmp_path / "batch_id=0")
+        take("a", 0, dest)
+        assert sorted(r.id for r in spark.read.parquet(dest).collect()) == [0, 2, 4]
+        with pytest.raises(FileExistsError):
+            take("a", 0, dest)
+    finally:
+        done()
+
+
+def test_stage_batch_dirs2_null_bucket_raises(spark):
+    """The non-NULL bucket precondition fails the staging write itself:
+    a NULL bucket row would otherwise land under the hive default
+    partition, where take("b", ...) picks it up and take("a", ...)
+    drops it."""
+    from servicenow_cmdb_integration_to_aws_spark.streaming.compaction import (
+        _stage_batch_dirs2,
+    )
+
+    df = spark.range(6)
+    bucket_a = F.when(F.col("id") != 3, F.col("id") % 2)
+    with pytest.raises(Exception, match="NULL bucket a"):
+        _stage_batch_dirs2(df, bucket_a, F.col("id") % 3)
