@@ -12,6 +12,20 @@ number only sets the *upper* bound of the shuffle fan-out at small SF.
 - AQE (adaptive query execution) handles runtime partition coalescing,
   skew-join splitting and broadcast demotion — required at scale and
   harmless at sf0.01.
+
+Codegen class cache: Spark keeps at most
+``spark.sql.codegen.cache.maxEntries`` compiled classes per JVM, 100 by
+default. The registry generates ~2590 distinct classes over its 274 ids
+(``tools/codegen_census.py``) and each benchmark's timed set 236-304, so
+at the default a long-lived session evicts every class before its next
+use and recompiles each query's code on every invocation (Janino compile
+time, then C1/C2 re-JIT of the fresh classes and the GC of the old ones).
+:data:`CODEGEN_CACHE_MAX_ENTRIES` holds the whole registry with ~58%
+headroom. The conf is STATIC: it is read once when the SparkContext
+starts, so only :func:`build_session` can set it, and :func:`tune`
+cannot apply it to a session the engine did not build. When ids are
+added, re-run ``tools/codegen_census.py``; it exits non-zero once the
+distinct classes exceed the constant.
 """
 
 from __future__ import annotations
@@ -22,6 +36,11 @@ import warnings
 from pyspark.sql import SparkSession
 
 _WARNED_ACTIVE_SESSION_PIN = False
+
+#: ``spark.sql.codegen.cache.maxEntries`` for sessions the engine builds:
+#: the registry's ~2590 distinct generated classes plus headroom (see the
+#: module docstring).
+CODEGEN_CACHE_MAX_ENTRIES = 4096
 
 #: Confs that are runtime-settable and must hold on ANY session our
 #: queries run under — including the driver-owned session passed into
@@ -104,6 +123,7 @@ def build_session(app_name: str = "cmdb-spark-engine") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         b = b.config(k, v)

@@ -785,3 +785,24 @@ def test_i21_consistent_join_plan_shape(spark, sf_dir):
     assert plan.count("PushedFilters: [IsNotNull(user_id)]") >= 2, plan
     assert "partial_sum" in plan and "partial_count" in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_repeat_invocations_reuse_generated_code(spark, sf_dir):
+    """Codegen class cache: a second pass over the llm_curation timed
+    pins (~154 generated classes at sf0.1) must compile nothing. At
+    Spark's default ``spark.sql.codegen.cache.maxEntries`` (100) the
+    first pass's classes are evicted before the second pass reuses them
+    and every invocation recompiles its code; ``build_session`` sizes
+    the cache to the registry's working set (session.py docstring)."""
+    pins = ("j2_minhash_lsh", "j16_neardup_components", "j41_semdedup",
+            "j12_embedding_neardup", "j50_tau_sweep", "j39_edit_distance_nn")
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass():
+        for qid in pins:
+            _q(spark, sf_dir, qid).write.mode("overwrite").format("noop").save()
+
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() - before == 0
